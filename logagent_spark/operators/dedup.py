@@ -15,9 +15,9 @@ Scale design (the whole point — 10^12 docs):
     batch) because 64 per-bit conditional sums as Columns would bloat
     codegen; near-dup pairs via banded key join on 16-bit chunks
     (Hamming<=3 => at least one of 4 chunks equal — pigeonhole);
-  * embedding near-dup: random-hyperplane LSH with seeded literal
-    hyperplanes — sign-bit bucket as a Column expression, cosine check
-    within buckets only.
+  * embedding near-dup: random-hyperplane LSH with seeded hyperplanes —
+    banded sign-bit keys and the per-bucket cosine in Arrow/numpy
+    (operators/vecfold.py), cosine check within buckets only.
 """
 
 from __future__ import annotations
@@ -34,6 +34,12 @@ from logagent_spark.operators.textstats import (
     shingles,
     shingles_from_tokens,
     tokens,
+)
+from logagent_spark.operators.vecfold import (
+    fold_cos_pair,
+    seq_dot,
+    seq_norm2,
+    valid_matrix,
 )
 
 # ---------------------------------------------------------------------------
@@ -560,7 +566,8 @@ def seeded_planes(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
 def hyperplane_bits(emb: Column, planes: np.ndarray) -> list[Column]:
     """Sign bit (0/1) per hyperplane, as pure Column expressions: the
     planes are literals, each dot is one zip_with/aggregate fold —
-    scan-side, no UDF, no shuffle."""
+    scan-side, no UDF, no shuffle. The reference the Arrow band keys
+    (`_hyperplane_band_keys_pandas`) are pinned against."""
     bits = []
     for p in planes:
         lit_vec = F.array(*[F.lit(float(x)) for x in p])
@@ -571,16 +578,6 @@ def hyperplane_bits(emb: Column, planes: np.ndarray) -> list[Column]:
         )
         bits.append(F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)))
     return bits
-
-
-def hyperplane_bucket(
-    emb: Column, dim: int, n_planes: int = 16, seed: int = 42
-) -> Column:
-    """Full sign-bucket id (all planes concatenated)."""
-    bucket = F.lit(0)
-    for b in hyperplane_bits(emb, seeded_planes(n_planes, dim, seed)):
-        bucket = bucket * 2 + b
-    return bucket
 
 
 def plane_chunks(n_planes: int, n_chunks: int = 3) -> list[list[int]]:
@@ -606,21 +603,21 @@ def _hyperplane_band_keys_pandas(
     """Banded sign-bucket keys as ONE Arrow/numpy pass (mapInPandas),
     replacing n_planes interpreted zip_with/aggregate folds per row
     (HOF exprs never codegen — the per-ROW twin of CLAUDE.md's per-PAIR
-    trap). Each plane's dot accumulates as a sequential left fold over
-    DIMENSIONS, vectorized across rows x planes — one rounded multiply
-    + one rounded add per step, the exact rounding sequence of the
-    expression fold, so band keys are bit-identical for valid vectors.
-    Invalid vectors (NULL, ragged length, NULL element) take key 0 in
-    every band, matching the expr's NULL-propagating fold under
-    `when(dot >= 0, 1).otherwise(0)`; a NaN dot reached from inf
-    arithmetic takes bit 1 (Spark orders NaN above every number). A
+    trap). The plane dots are `vecfold.seq_dot`, so band keys are
+    bit-identical to `hyperplane_bits` for valid vectors. Invalid
+    vectors (`vecfold.valid_matrix`: NULL, ragged length, NULL element)
+    take key 0 in every band, matching the Column's NULL-propagating
+    fold under `when(dot >= 0, 1).otherwise(0)`; a NaN dot reached from
+    inf arithmetic takes bit 1 (Spark orders NaN above every number). A
     literal-NaN ELEMENT is indistinguishable from a NULL element after
-    Arrow and yields key 0 where the expr would emit all-ones bits —
-    the documented assign_buckets_pandas divergence, unreachable on a
-    real embedding corpus. The band explode rides the same pass: one
+    Arrow and yields key 0 where the Column bits are all ones.
+    Keys are int32 and wrap at 32 bits per band (`suggest_lsh_config`
+    goes up to 32): the wrap is injective modulo 2^32, so distinct sign
+    patterns keep distinct keys, and int64 would add 4 B per row to the
+    bucket exchange. The band explode rides the same pass: one
     (id, emb, band, key) row per band comes straight out of Arrow."""
     planes = np.asarray(planes, dtype=np.float64)
-    n_planes, dim = planes.shape
+    dim = planes.shape[1]
     n_chunks = len(chunks)
     schema = T.StructType([
         T.StructField("_id", df.schema[id_col].dataType),
@@ -635,27 +632,15 @@ def _hyperplane_band_keys_pandas(
             if n == 0:
                 continue
             embs = list(pdf[emb_col])
-            vecs = [
-                None if v is None else np.asarray(v, dtype=np.float64)
-                for v in embs
-            ]
-            valid = [
-                i for i, v in enumerate(vecs)
-                if v is not None and len(v) == dim
-                and not np.isnan(v).any()
-            ]
+            valid, e = valid_matrix(embs, dim)
+            dots = seq_dot(e, planes.T)
+            bits = ((dots >= 0) | np.isnan(dots)).astype(np.int32)
             keys = np.zeros((n, n_chunks), dtype=np.int32)
-            if valid:
-                e = np.asarray([vecs[i] for i in valid])
-                dots = np.zeros((len(valid), n_planes), dtype=np.float64)
-                for d in range(dim):
-                    dots += e[:, d][:, None] * planes[:, d][None, :]
-                bits = ((dots >= 0) | np.isnan(dots)).astype(np.int32)
-                for c, idxs in enumerate(chunks):
-                    k = np.zeros(len(valid), dtype=np.int32)
-                    for i in idxs:
-                        k = k * 2 + bits[:, i]
-                    keys[valid, c] = k
+            for c, idxs in enumerate(chunks):
+                k = np.zeros(len(valid), dtype=np.int32)
+                for i in idxs:
+                    k = k * 2 + bits[:, i]
+                keys[valid, c] = k
             yield pd.DataFrame({
                 "_id": np.repeat(pdf[id_col].to_numpy(), n_chunks),
                 "_e": [v for v in embs for _ in range(n_chunks)],
@@ -686,7 +671,6 @@ def embedding_candidate_pairs(
     seed: int = 42,
     n_chunks: int = 3,
     max_bucket_size: int = 4096,
-    strategy: str = "pandas",
 ) -> DataFrame:
     """Candidate embedding pairs (a, b, cos) via banded hyperplane LSH.
 
@@ -696,144 +680,39 @@ def embedding_candidate_pairs(
     guaranteed found (single-probe bucketing misses any pair straddling
     ONE hyperplane; banding trades more candidates for that recall).
 
-    Two scoring strategies with BIT-IDENTICAL cos values (the same
-    sequential-fold rounding sequence — the knn_join_ivf precedent):
+    Plan: one mapInPandas pass emits an (id, emb, band, key) row per
+    band (`_hyperplane_band_keys_pandas`), the rows shuffle once on
+    (band, key), and each bucket scores ALL its pairs a < b in one
+    applyInPandas call with the `vecfold` cosine — bit-identical to
+    `cosine`, the Column fold the DuckDB oracle mirrors. No pair join
+    re-attaches vectors: at the 100k-vector bench's 66.7M candidates,
+    two vector shuffles keyed by pair id plus an interpreted HOF fold
+    per pair (~10 us/pair; see CLAUDE.md) dominated the run.
 
-    * ``pandas`` (default, the scale path) — embeddings ride the band
-      explode once, buckets score ALL their pairs in one Arrow/numpy
-      pass per (band, key) group (`_seq` folds over dimensions,
-      vectorized across the pair matrix), and the oversized-bucket cap
-      is a per-group length check — no per-pair join ever materializes
-      vectors. The band keys themselves come from the same Arrow
-      family (`_hyperplane_band_keys_pandas`): n_planes interpreted
-      zip_with/aggregate folds per row became one numpy pass with the
-      identical fold rounding sequence (r7). r6's expr path joined the 66.7M-candidate pair list back
-      to the embeddings (TWO shuffles of vectors keyed by pair id) and
-      scored each pair with an INTERPRETED HOF fold (~10 us/pair; see
-      CLAUDE.md) — that join + fold dominated the 100k-vector bench.
-    * ``expr`` — the r6 shape (skinny pair self-join, embeddings
-      re-attached, JVM Column fold). Kept because it is the
-      oracle-shaped plan and the right form when vectors are huge
-      relative to the candidate count.
-
-    Degenerate buckets (near-constant embedding clusters) are capped in
-    both strategies — they are exact-dup clusters in disguise.
+    Buckets over `max_bucket_size` emit nothing: degenerate buckets
+    (near-constant embedding clusters) are exact-dup clusters in
+    disguise.
     """
-    if strategy == "pandas":
-        with_keys = _hyperplane_band_keys_pandas(
-            df, id_col, emb_col,
-            seeded_planes(n_planes, dim, seed),
-            plane_chunks(n_planes, n_chunks),
-        )
-        scored = with_keys.groupBy("band", "key").applyInPandas(
-            _score_bucket_pairs_fn(max_bucket_size),
-            T.StructType([
-                T.StructField("a", df.schema[id_col].dataType),
-                T.StructField("b", df.schema[id_col].dataType),
-                T.StructField("cos", T.DoubleType()),
-            ]),
-        )
-        return scored.distinct()
-    if strategy != "expr":
-        raise ValueError(f"unknown strategy `{strategy}`")
-
-    bits = hyperplane_bits(F.col(emb_col), seeded_planes(n_planes, dim, seed))
-    chunk_keys = []
-    for c, idxs in enumerate(plane_chunks(n_planes, n_chunks)):
-        key = F.lit(0)
-        for i in idxs:
-            key = key * 2 + bits[i]
-        chunk_keys.append(
-            F.struct(F.lit(c).alias("band"), key.alias("key"))
-        )
-
-    skinny = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.array(*chunk_keys)).alias("_bk"),
-    ).select("_id", "_bk.band", "_bk.key")
-
-    sizes = skinny.groupBy("band", "key").agg(F.count(F.lit(1)).alias("_n"))
-    bounded = skinny.join(
-        sizes.filter(F.col("_n") <= max_bucket_size), ["band", "key"]
+    with_keys = _hyperplane_band_keys_pandas(
+        df, id_col, emb_col,
+        seeded_planes(n_planes, dim, seed),
+        plane_chunks(n_planes, n_chunks),
     )
-    a = bounded.select("band", "key", F.col("_id").alias("a"))
-    b = bounded.select("band", "key", F.col("_id").alias("b"))
-    pairs = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
+    scored = with_keys.groupBy("band", "key").applyInPandas(
+        _score_bucket_pairs_fn(max_bucket_size),
+        T.StructType([
+            T.StructField("a", df.schema[id_col].dataType),
+            T.StructField("b", df.schema[id_col].dataType),
+            T.StructField("cos", T.DoubleType()),
+        ]),
     )
-
-    # norms hoisted to the per-VECTOR projection: computing them inside
-    # the per-pair cosine would evaluate two squared-sum folds per
-    # candidate pair (~2/3 of the verify cost at high cand_frac) instead
-    # of once per vector; the arithmetic is unchanged (dot / (na * nb))
-    # so results are bit-identical
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col(emb_col), lambda x: x * x),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-    )
-    emb = df.select(
-        F.col(id_col).alias("_eid"), F.col(emb_col).alias("_e"),
-        norm.alias("_n"),
-    )
-    ea = emb.select(F.col("_eid").alias("a"), F.col("_e").alias("_ea"),
-                    F.col("_n").alias("_na"))
-    eb = emb.select(F.col("_eid").alias("b"), F.col("_e").alias("_eb"),
-                    F.col("_n").alias("_nb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("_ea"), F.col("_eb"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    cos = F.when(
-        (F.col("_na") > 0) & (F.col("_nb") > 0),
-        dot / (F.col("_na") * F.col("_nb")),
-    ).otherwise(F.lit(0.0))
-    return (
-        pairs.join(ea, "a")
-        .join(eb, "b")
-        .select("a", "b", cos.alias("cos"))
-    )
-
-
-def _fold_cos_pair(va, vb):
-    """Scalar twin of the expr-path cosine for one pair, reproducing the
-    JVM fold's NULL semantics exactly: a NULL/None-element vector has a
-    NULL norm (cos -> 0.0 via the otherwise branch), a zero norm yields
-    0.0, and a LENGTH-MISMATCHED pair with valid norms yields NULL
-    (zip_with pads with null, the fold goes sticky-null). Python float
-    arithmetic is the same IEEE double sequence as the fold."""
-    def norm2(v):
-        if v is None:
-            return None
-        acc = 0.0
-        for x in v:
-            if x is None:
-                return None
-            acc = acc + x * x
-        return acc
-
-    na2, nb2 = norm2(va), norm2(vb)
-    if na2 is None or nb2 is None:
-        return 0.0
-    na, nb = math.sqrt(na2), math.sqrt(nb2)
-    if not (na > 0 and nb > 0):
-        return 0.0
-    if len(va) != len(vb):
-        return None  # padded null poisons the dot fold
-    acc = 0.0
-    for x, y in zip(va, vb):
-        acc = acc + x * y
-    return acc / (na * nb)
+    return scored.distinct()
 
 
 def _score_bucket_pairs_fn(max_bucket_size: int):
     """applyInPandas scorer for one LSH bucket: all pairs (a < b) with
-    the sequential-fold cosine (bit-identical to the expr strategy).
-    Groups over the cap emit nothing (the degenerate-bucket guard)."""
+    the `vecfold` cosine. Groups over the cap emit nothing (the
+    degenerate-bucket guard)."""
 
     def score(pdf: "pd.DataFrame") -> "pd.DataFrame":
         n = len(pdf)
@@ -848,22 +727,14 @@ def _score_bucket_pairs_fn(max_bucket_size: int):
             for v in vecs
         )
         ii, jj = np.triu_indices(n, k=1)
-        keep = ids[ii] != ids[jj]  # a < b is STRICT in the expr path
+        keep = ids[ii] != ids[jj]  # a < b is STRICT
         ii, jj = ii[keep], jj[keep]
         if uniform and len(vecs[0]) > 0:
             e = np.asarray(
                 [np.asarray(v, dtype=np.float64) for v in vecs]
             )
-            # sequential left folds over dimensions (vectorized across
-            # the pair matrix): one rounded multiply + one rounded add
-            # per step, the exact expr/DuckDB rounding sequence
-            dot = np.zeros((n, n), dtype=np.float64)
-            n2 = np.zeros(n, dtype=np.float64)
-            for d in range(e.shape[1]):
-                col = e[:, d]
-                dot += col[:, None] * col[None, :]
-                n2 += col * col
-            en = np.sqrt(n2)
+            dot = seq_dot(e, e.T)
+            en = np.sqrt(seq_norm2(e))
             denom = en[:, None] * en[None, :]
             with np.errstate(divide="ignore", invalid="ignore"):
                 cosm = dot / denom
@@ -872,7 +743,7 @@ def _score_bucket_pairs_fn(max_bucket_size: int):
             cos_vals = cosm[ii, jj]
         else:
             cos_vals = [
-                _fold_cos_pair(vecs[i], vecs[j]) for i, j in zip(ii, jj)
+                fold_cos_pair(vecs[i], vecs[j]) for i, j in zip(ii, jj)
             ]
         return pd.DataFrame({"a": ids[ii], "b": ids[jj], "cos": cos_vals})
 

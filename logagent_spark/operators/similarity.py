@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from logagent_spark.operators.dedup import cosine
+from logagent_spark.operators.vecfold import seq_dot, seq_norm2, valid_matrix
 
 
 def lit_vec(v) -> Column:
@@ -165,55 +166,34 @@ def centroid_assignment(
 def assign_buckets_pandas(
     df: DataFrame, emb_col: str, centroids: np.ndarray, out_col: str
 ) -> DataFrame:
-    """centroid_assignment as one Arrow/numpy pass (mapInPandas): the
-    C dot products accumulate as a sequential left fold over DIMENSIONS,
-    vectorized across rows and centroids — each fold step is one rounded
-    multiply + one rounded add per (row, centroid), the exact rounding
-    sequence of the expression fold, and np.argmax is first-occurrence
-    like array_position(dots, array_max(dots)). Invalid vectors (NULL,
-    ragged length, NULL element) get a NULL bucket, matching the
-    NULL-propagating expr dots. The expr form runs INTERPRETED (HOFs
-    never codegen): C folds per row made assignment the dominant cost of
-    the IVF index build and the pandas join's corpus prep at 100k x 64
-    (r7, measured interleaved — see OPTIMIZATION_r07.md)."""
+    """centroid_assignment as one Arrow/numpy pass (mapInPandas): the C
+    dot products are `vecfold.seq_dot`, bit-identical to the expression
+    fold, and np.argmax is first-occurrence like
+    array_position(dots, array_max(dots)). Invalid vectors
+    (`vecfold.valid_matrix`: NULL, ragged length, NULL element) get a
+    NULL bucket, matching the NULL-propagating expr dots. The expr form
+    runs INTERPRETED (HOFs never codegen): C folds per row made
+    assignment the dominant cost of the IVF index build and the cogroup
+    join's corpus prep at 100k x 64 (r7, measured interleaved — see
+    OPTIMIZATION_r07.md)."""
     import pandas as pd
     from pyspark.sql import types as T
 
     cents = np.asarray(centroids, dtype=np.float64)
-    k, dim = cents.shape
+    dim = cents.shape[1]
     schema = T.StructType(
         list(df.schema.fields) + [T.StructField(out_col, T.IntegerType())]
     )
 
     def go(batches):
         for pdf in batches:
-            vecs = [
-                None if v is None
-                else np.asarray(v, dtype=np.float64)
-                for v in pdf[emb_col]
-            ]
-            out = np.full(len(vecs), None, dtype=object)
-            # NaN marks a NULL element after the Arrow transfer (nulls
-            # arrive as NaN): such vectors get a NULL bucket like the
-            # expr's NULL-propagating fold. A literal-NaN embedding is
-            # indistinguishable here and also yields NULL — documented
-            # divergence from the expr path's NaN ordering, which no
-            # real embedding corpus hits.
-            valid = [
-                i for i, v in enumerate(vecs)
-                if v is not None and len(v) == dim
-                and not np.isnan(v).any()
-            ]
-            if valid:
-                e = np.asarray([vecs[i] for i in valid])
-                dots = np.zeros((len(valid), k), dtype=np.float64)
-                for d in range(dim):
-                    dots += e[:, d][:, None] * cents[:, d][None, :]
-                idx = np.argmax(dots, axis=1)
-                for j, i in enumerate(valid):
-                    out[i] = int(idx[j])
+            valid, e = valid_matrix(pdf[emb_col], dim)
+            bucket = np.zeros(len(pdf), dtype=np.int32)
+            bucket[valid] = np.argmax(seq_dot(e, cents.T), axis=1)
+            missing = np.ones(len(pdf), dtype=bool)
+            missing[valid] = False
             res = pdf.copy()
-            res[out_col] = pd.array(out, dtype="Int32")
+            res[out_col] = pd.arrays.IntegerArray(bucket, missing)
             yield res
 
     return df.mapInPandas(go, schema)
@@ -225,32 +205,24 @@ def kmeans_refine(
     centroids: np.ndarray,
     *,
     iters: int = 3,
-    strategy: str = "pandas",
 ) -> np.ndarray:
     """Distributed Lloyd refinement of the IVF centroids.
 
-    Each round: assignment is the scan-side argmax expression
-    (centroid_assignment — no UDF, no shuffle of vectors beyond the
-    groupBy on the tiny bucket key), the new centroid is one hash
-    aggregate of per-dimension means (dim `avg` exprs — map-side
-    partial aggregation makes this one skinny shuffle of k×dim
-    doubles). Only k×dim floats ever reach the driver per round; at
-    10^12 rows you run this on a sample first, then one final
-    assignment pass. Empty clusters keep their previous centroid.
+    Each round: assignment is one Arrow pass (`assign_buckets_pandas`,
+    no shuffle of vectors beyond the groupBy on the tiny bucket key),
+    the new centroid is one hash aggregate of per-dimension means (dim
+    `avg` exprs — map-side partial aggregation makes this one skinny
+    shuffle of k×dim doubles). Only k×dim floats ever reach the driver
+    per round; at 10^12 rows you run this on a sample first, then one
+    final assignment pass. Empty clusters keep their previous centroid.
     Centroids are re-unit-normalized each round (the index uses
     dot-product probing on unit centroids)."""
     cents = np.asarray(centroids, dtype=float)
     k, dim = cents.shape
     for _ in range(iters):
-        if strategy == "pandas":
-            assigned = assign_buckets_pandas(
-                df.select(F.col(emb_col).alias("_e")), "_e", cents, "_b"
-            )
-        else:
-            assigned = df.select(
-                centroid_assignment(F.col(emb_col), cents).alias("_b"),
-                F.col(emb_col).alias("_e"),
-            )
+        assigned = assign_buckets_pandas(
+            df.select(F.col(emb_col).alias("_e")), "_e", cents, "_b"
+        )
         means = assigned.groupBy("_b").agg(
             *[F.avg(F.col("_e")[i]).alias(f"m{i}") for i in range(dim)]
         ).collect()
@@ -308,32 +280,6 @@ def ivf_topk(
 # ---------------------------------------------------------------------------
 # batched k-NN join (many queries at once)
 
-def _seq_norm2(mat: np.ndarray, axis_dim: int) -> np.ndarray:
-    """Sum of squares as a sequential left fold over dimensions
-    (vectorized across the other axis) — the same rounding sequence as
-    F.aggregate / DuckDB, unlike numpy's pairwise np.sum."""
-    mat = np.moveaxis(np.asarray(mat, dtype=np.float64), axis_dim, 0)
-    acc = np.zeros(mat.shape[1:], dtype=np.float64)
-    for d in range(mat.shape[0]):
-        acc += mat[d] * mat[d]
-    return acc
-
-
-def _seq_dot_and_norm2(e: np.ndarray, qmat: np.ndarray):
-    """(n x dim) rows vs (dim x Q) queries -> sequential-fold dot
-    (n x Q) and row sum-of-squares (n,). Each fold step is one rounded
-    multiply + one rounded add per element, in dimension order —
-    bit-identical to a scalar left fold."""
-    n, dim = e.shape
-    dot = np.zeros((n, qmat.shape[1]), dtype=np.float64)
-    n2 = np.zeros(n, dtype=np.float64)
-    for d in range(dim):
-        col = e[:, d]
-        dot += col[:, None] * qmat[d][None, :]
-        n2 += col * col
-    return dot, n2
-
-
 def probe_buckets(emb: Column, centroids: np.ndarray, nprobe: int) -> Column:
     """Top-nprobe centroid ids by dot product, as a pure Column
     expression: the C dots land in ONE struct array (each dot evaluated
@@ -367,44 +313,35 @@ def knn_join_ivf(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
     query_emb_col: str = "qemb",
-    broadcast_queries: bool = True,
-    strategy: str = "expr",
+    strategy: str = "pandas",
 ) -> DataFrame:
     """k-NN join for the LARGE-Q regime knn_join's closure bound rules
     out: queries are a DataFrame, so Q is unbounded and nothing rides
     the task closure.
 
-    Plan shape: corpus rows get their single IVF bucket scan-side
-    (argmax Column expr — at 10^12 rows the assignment is materialized
-    once at ingest via ivf_index and the table is write-partitioned by
-    it); each query explodes to its nprobe probe buckets; candidates
-    meet on the bucket key; the global per-query top-k window shuffles
-    only skinny candidate rows, bounded by bucket occupancy * nprobe.
+    Plan shape: corpus rows get their single IVF bucket in one Arrow
+    pass (`assign_buckets_pandas`; at 10^12 rows the assignment is
+    materialized once at ingest via ivf_index and the table is
+    write-partitioned by it); each query explodes to its nprobe probe
+    buckets (`probe_buckets`, a Column expr); both sides cogroup on the
+    bucket key and each bucket scores its queries against its corpus
+    rows in one numpy pass (`vecfold` dots, bit-identical to `cosine`
+    and the DuckDB oracle's fold), emitting only its per-query top-k
+    under (ppm DESC, id ASC). The global per-query top-k window then
+    shuffles only those skinny rows, so the two-phase top-k is exact.
+    The corpus shuffles once on the bucket key — co-located when the
+    table is bucket-partitioned at ingest. Scoring pairs with the
+    Column `cosine` instead runs INTERPRETED (HOF exprs never codegen,
+    ~10 us/pair: 31M pairs took ~460 s on 32 cores, ~30x this path).
+
     nprobe = len(centroids) is full probe — exact brute force, the
     oracle configuration; partial probe trades recall for scan fraction
-    exactly like ivf_topk.
-
-    Two scoring strategies with BIT-IDENTICAL ppm scores:
-
-    * ``expr`` — join then the JVM `cosine` Column per pair (same fold
-      order as the DuckDB oracle). Exact and oracle-friendly, but
-      higher-order-function expressions are evaluated INTERPRETED
-      (never whole-stage codegen), so per-pair cost is ~10 us — fine
-      for gate-scale candidate volumes, ruinous at millions of pairs
-      (measured: 31M pairs = ~460 s on 32 cores). With
-      `broadcast_queries` (default) the probed query side broadcasts
-      and the corpus is never shuffled.
-    * ``pandas`` — cogroup both sides on the bucket key and score each
-      bucket with one Arrow-batched numpy pass (the sequential-fold
-      dot of `_seq_dot_and_norm2`, bit-identical to the expr/DuckDB
-      fold), emitting only per-(query, bucket) top-k rows. The corpus
-      shuffles once on the bucket key — at 10^12 rows the table is
-      already bucket-partitioned at ingest, making this a co-located
-      join. This is the large-Q scale path: ~30x faster than expr at
-      31M pairs. Per-bucket selection under (ppm DESC, id ASC) keeps
-      the two-phase top-k exact."""
+    exactly like ivf_topk. `strategy` accepts only "pandas" (the one
+    scorer; the keyword stays for existing callers)."""
     from pyspark.sql import Window
 
+    if strategy != "pandas":
+        raise ValueError(f"unknown strategy `{strategy}`")
     probed = queries_df.select(
         F.col(query_id_col),
         F.col(query_emb_col).alias("_qe"),
@@ -412,39 +349,13 @@ def knn_join_ivf(
             probe_buckets(F.col(query_emb_col), centroids, nprobe)
         ).alias("_bkt"),
     )
-    if strategy == "pandas":
-        # the corpus-side bucket assignment rides the same Arrow boundary
-        # the scorer already pays; the interpreted C-fold expr was the
-        # prep cost of the cogroup input (r7)
-        indexed = assign_buckets_pandas(
-            corpus.select(F.col(id_col), F.col(emb_col).alias("_ce")),
-            "_ce", centroids, "_bkt",
-        )
-    else:
-        indexed = corpus.select(
-            F.col(id_col),
-            F.col(emb_col).alias("_ce"),
-            centroid_assignment(F.col(emb_col), centroids).alias("_bkt"),
-        )
-
-    if strategy == "pandas":
-        scored = _score_buckets_pandas(
-            probed, indexed, k=k,
-            id_col=id_col, query_id_col=query_id_col,
-        )
-    elif strategy == "expr":
-        if broadcast_queries:
-            probed = F.broadcast(probed)
-        scored = probed.join(indexed, "_bkt").select(
-            query_id_col,
-            id_col,
-            F.floor(cosine(F.col("_qe"), F.col("_ce")) * 1_000_000)
-            .cast("long")
-            .alias("cos_ppm"),
-        )
-    else:
-        raise ValueError(f"unknown strategy `{strategy}`")
-
+    indexed = assign_buckets_pandas(
+        corpus.select(F.col(id_col), F.col(emb_col).alias("_ce")),
+        "_ce", centroids, "_bkt",
+    )
+    scored = _score_buckets_pandas(
+        probed, indexed, k=k, id_col=id_col, query_id_col=query_id_col,
+    )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cos_ppm").desc(), F.col(id_col).asc()
     )
@@ -464,8 +375,8 @@ def _score_buckets_pandas(
 ) -> DataFrame:
     """Per-bucket Arrow/numpy scoring for knn_join_ivf: cogroup the
     probed queries and the bucketed corpus on the bucket key; each
-    bucket computes the sequential-fold cosine matrix (bit-identical to
-    the Column-expr fold) and emits only its per-query top-k."""
+    bucket computes the `vecfold` cosine matrix (bit-identical to the
+    Column-expr fold) and emits only its per-query top-k."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -482,19 +393,19 @@ def _score_buckets_pandas(
         if len(qpdf) == 0 or len(cpdf) == 0:
             return pd.DataFrame(columns=cols)
         e = np.asarray([np.asarray(v, dtype=np.float64) for v in cpdf["_ce"]])
-        qm = np.asarray(
+        q = np.asarray(
             [np.asarray(v, dtype=np.float64) for v in qpdf["_qe"]]
-        ).T  # dim x Qb
-        dot, n2 = _seq_dot_and_norm2(e, qm)
-        en = np.sqrt(n2)
+        )  # Qb x dim
+        dot = seq_dot(e, q.T)
+        en = np.sqrt(seq_norm2(e))
         en[en == 0] = 1.0
-        qn = np.sqrt(_seq_norm2(qm, 0))
+        qn = np.sqrt(seq_norm2(q))
         qn[qn == 0] = 1.0
         ppm = np.floor(dot / (en[:, None] * qn[None, :]) * 1_000_000)
         ppm = ppm.astype(np.int64)
         ids = cpdf[id_col].to_numpy()
         top = min(k, len(ids))
-        n_q = qm.shape[1]
+        n_q = len(q)
         # per-query top-k via np.lexsort under the SAME (ppm DESC, id
         # ASC) order as the global window (the knn_join batch pattern) —
         # the r6 pandas DataFrame + sort_values per (query, bucket) was
@@ -556,8 +467,8 @@ def knn_join(
         )
 
     qids = [int(q[0]) for q in queries]
-    qmat = np.asarray([q[1] for q in queries], dtype=np.float64).T  # dim x Q
-    qnorm = np.sqrt(_seq_norm2(qmat, 0))
+    qmat = np.asarray([q[1] for q in queries], dtype=np.float64)  # Q x dim
+    qnorm = np.sqrt(seq_norm2(qmat))
     qnorm[qnorm == 0] = 1.0
 
     out_schema = T.StructType([
@@ -575,14 +486,11 @@ def knn_join(
                 [np.asarray(v, dtype=np.float64) for v in pdf[emb_col]]
             )
             ids = pdf[id_col].to_numpy()
-            # dot and norms as SEQUENTIAL left folds over dimensions
-            # (vectorized across rows): acc <- round(acc + round(x*y))
-            # per step — bit-identical to dedup.cosine()'s F.aggregate
-            # fold and DuckDB's list_cosine_similarity. BLAS dgemm uses
-            # blocked/pairwise summation, which can land a few ulps off
-            # and flip the ppm floor at integer boundaries.
-            dot, en2 = _seq_dot_and_norm2(e, qmat)
-            en = np.sqrt(en2)
+            # vecfold dots and norms, not BLAS: bit-identical to
+            # dedup.cosine()'s fold and DuckDB's list_cosine_similarity,
+            # so the ppm floor never flips at integer boundaries
+            dot = seq_dot(e, qmat.T)
+            en = np.sqrt(seq_norm2(e))
             en[en == 0] = 1.0
             cos = dot / (en[:, None] * qnorm[None, :])
             ppm = np.floor(cos * 1_000_000).astype(np.int64)

@@ -302,15 +302,20 @@ def test_embedding_near_duplicates_auto_config(spark):
 
 
 def test_hyperplane_band_keys_pandas_bit_identical(spark):
-    """r7: the Arrow band-key pass must reproduce the expr fold's band
+    """r7: the Arrow band-key pass must reproduce the Column fold's band
     keys bit-exactly — sequential fold over dimensions, `dot >= 0` with
     Spark's NaN-is-largest ordering — including edge vectors (NULL /
     ragged / NULL-element -> key 0 in every band; inf arithmetic whose
-    dot goes NaN -> bit 1), and the two candidate strategies must emit
-    the same pair set. (cos VALUES on inf vectors differ NULL-vs-NaN in
-    the scorer's Arrow return — pre-existing, unreachable on real
-    embeddings, out of scope here.)"""
-    dim, n_planes, n_chunks = 16, 8, 3
+    dot goes NaN -> bit 1). A literal-NaN element is the documented
+    divergence: Arrow key 0, Column bits all ones. The candidate pairs
+    must equal a Python reference built from those keys: pairs sharing
+    a (band, key) bucket of at most max_bucket_size rows, scored by the
+    scalar fold twin (whose NaN the Arrow return carries as NULL)."""
+    import math
+
+    from logagent_spark.operators.vecfold import fold_cos_pair
+
+    dim, n_planes, n_chunks, cap = 16, 8, 3, 20
     rng = np.random.RandomState(7)
     rows = [(str(i), rng.randn(dim).tolist()) for i in range(120)]
     base = rng.randn(dim)
@@ -320,6 +325,7 @@ def test_hyperplane_band_keys_pandas_bit_identical(spark):
         ("e_null", None),
         ("e_ragged", [1.0] * (dim - 1)),
         ("e_nullel", [None] + [1.0] * (dim - 1)),
+        ("e_nan", [float("nan")] + [1.0] * (dim - 1)),
         ("e_zero", [0.0] * dim),
         ("e_inf", [float("inf")] + [0.0] * (dim - 1)),
         ("e_infnan", [float("inf"), float("-inf")] + [1.0] * (dim - 2)),
@@ -346,22 +352,75 @@ def test_hyperplane_band_keys_pandas_bit_identical(spark):
         for r in df.select(*sel).collect()
         for c in range(n_chunks)
     }
-    assert got == exp
+    nan_keys = {(vid, c) for vid, c in exp if vid == "e_nan"}
+    assert {k: v for k, v in got.items() if k not in nan_keys} == {
+        k: v for k, v in exp.items() if k not in nan_keys
+    }
     # every edge vector really takes key 0 in every band
-    for vid in ("e_null", "e_ragged", "e_nullel"):
+    for vid in ("e_null", "e_ragged", "e_nullel", "e_nan"):
         assert all(got[(vid, c)] == 0 for c in range(n_chunks))
+    # the literal-NaN divergence: all-ones Column bits in every band
+    assert all(
+        exp[("e_nan", c)] == 2 ** len(idxs) - 1
+        for c, idxs in enumerate(chunks)
+    )
 
-    pair_sets = [
-        {
-            (r["a"], r["b"])
-            for r in dedup.embedding_candidate_pairs(
-                df, "vid", "emb", dim=dim, n_planes=n_planes,
-                n_chunks=n_chunks, strategy=s,
-            ).collect()
-        }
-        for s in ("pandas", "expr")
-    ]
-    assert pair_sets[0] == pair_sets[1]
+    keys = dict(exp)
+    keys.update({k: 0 for k in nan_keys})
+    buckets: dict = {}
+    for (vid, c), key in keys.items():
+        buckets.setdefault((c, key), []).append(vid)
+    vec = dict(rows)
+    want = {}
+    for members in buckets.values():
+        if len(members) > cap:
+            continue
+        for a, b in itertools.combinations(sorted(members), 2):
+            cos = fold_cos_pair(vec[a], vec[b])
+            want[(a, b)] = None if cos is None or math.isnan(cos) else cos
+    assert want and any(len(m) > cap for m in buckets.values())
+    got_pairs = {
+        (r["a"], r["b"]): r["cos"]
+        for r in dedup.embedding_candidate_pairs(
+            df, "vid", "emb", dim=dim, n_planes=n_planes,
+            n_chunks=n_chunks, max_bucket_size=cap,
+        ).collect()
+    }
+    assert got_pairs == want
+
+
+def test_band_keys_32_bits_per_band_stay_distinct(spark):
+    """bits_per_band == 32 (suggest_lsh_config's upper bound): the int32
+    key wraps, and the wrap must be injective — every distinct 32-bit
+    sign pattern keeps a distinct key. Checked against a Python
+    reference (scalar left-fold dots, sign bits, two's-complement
+    wrap); the Column keys cannot serve, they overflow under ANSI."""
+    dim, n_planes = 8, 32
+    rng = np.random.RandomState(5)
+    rows = [(i, rng.randn(dim).tolist()) for i in range(200)]
+    df = spark.createDataFrame(rows, "vid long, emb array<double>")
+    planes = dedup.seeded_planes(n_planes, dim, 42)
+    got = {
+        r["_id"]: r["key"]
+        for r in dedup._hyperplane_band_keys_pandas(
+            df, "vid", "emb", planes, [list(range(n_planes))]
+        ).collect()
+    }
+
+    def ref_key(v):
+        u = 0
+        for p in planes:
+            acc = 0.0
+            for x, y in zip(v, p):
+                acc = acc + x * y
+            u = u * 2 + (1 if acc >= 0 else 0)
+        return u - 2 ** 32 if u >= 2 ** 31 else u
+
+    want = {vid: ref_key(v) for vid, v in rows}
+    assert got == want
+    patterns = {vid: ref_key(v) % 2 ** 32 for vid, v in rows}
+    assert len(set(got.values())) == len(set(patterns.values()))
+    assert min(got.values()) < 0  # the wrap is really exercised
 
 
 def test_connected_components_raises_on_nonconvergence(spark):

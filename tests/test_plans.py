@@ -5,6 +5,8 @@ JVM-side unless the grok path is explicitly chosen."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -28,6 +30,15 @@ def _plan(df) -> str:
 
 def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _nodes(plan: str) -> list[str]:
+    """Operator names of a plan string, one per tree line."""
+    return [
+        m.group(1)
+        for m in (re.match(r"[\s:|+-]*(\w+)", ln) for ln in plan.splitlines())
+        if m
+    ]
 
 
 LOOKUP_SPEC = {
@@ -170,11 +181,12 @@ def test_inline_lookup_builds_without_shuffle(spark, pages_path):
     assert "SortAggregate" not in phys, phys
 
 
-def test_embedding_near_dup_plan_has_no_python_and_no_vector_buckets(spark):
-    """The banded-LSH near-dup plan must stay JVM-side (no Python eval
-    nodes) and must NOT collect embedding vectors into bucket rows
-    (collect_list of arrays was the r1 memory hazard — pairs join on
-    skinny (band,key,id) rows instead)."""
+def test_embedding_near_dup_plan_is_one_key_pass_and_one_bucket_scorer(spark):
+    """The banded-LSH near-dup plan: ONE MapInPandas emits (id, emb,
+    band, key) rows, they shuffle on (band, key), ONE
+    FlatMapGroupsInPandas scores each bucket. No pair join re-attaches
+    vectors (the r6 shape) and no collect_list gathers vectors into
+    bucket rows (the r1 memory hazard)."""
     import numpy as np
 
     from logagent_spark.operators.dedup import embedding_near_duplicates
@@ -184,8 +196,34 @@ def test_embedding_near_dup_plan_has_no_python_and_no_vector_buckets(spark):
     df = spark.createDataFrame(rows, "vid long, emb array<double>")
     out = embedding_near_duplicates(df, "vid", "emb", dim=16, threshold=0.5)
     plan = _plan(out)
-    assert "Python" not in plan and "ArrowEval" not in plan
+    nodes = _nodes(plan)
+    assert nodes.count("MapInPandas") == 1, plan
+    assert nodes.count("FlatMapGroupsInPandas") == 1, plan
+    assert "SortMergeJoin" not in nodes and "BroadcastHashJoin" not in nodes
     assert "collect_list" not in plan
+
+
+def test_knn_join_ivf_plan_is_one_cogroup_scorer(spark):
+    """knn_join_ivf scores in ONE FlatMapCoGroupsInPandas over the
+    bucket key (the corpus assignment is one MapInPandas); no
+    broadcast join pairs queries with corpus rows."""
+    import numpy as np
+
+    from logagent_spark.operators import similarity as sim
+
+    rng = np.random.RandomState(0)
+    rows = [(i, rng.randn(16).tolist()) for i in range(50)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    qdf = corpus.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb")
+    )
+    cents = sim.seeded_centroids(16, 6, seed=3)
+    plan = _plan(sim.knn_join_ivf(corpus, "embedding", qdf, cents, k=4,
+                                  nprobe=2))
+    nodes = _nodes(plan)
+    assert nodes.count("FlatMapCoGroupsInPandas") == 1, plan
+    assert nodes.count("MapInPandas") == 1, plan
+    assert "BroadcastHashJoin" not in nodes, plan
 
 
 def test_native_grok_dictionary_is_jvm_only(spark, pages_path):

@@ -183,11 +183,45 @@ def test_knn_join_ivf_full_probe_equals_closure_join(spark):
     assert got == want
 
 
+def _column_knn_join_ivf(corpus, qdf, cents, *, k, nprobe):
+    """knn_join_ivf's contract as a pure Column plan — the reference the
+    cogroup scorer is pinned against: probe_buckets explode, the
+    centroid_assignment bucket, the Column `cosine` per pair, and a
+    (ppm DESC, id ASC) row_number."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from logagent_spark.operators.dedup import cosine
+
+    probed = qdf.select(
+        "query_id", F.col("qemb").alias("_qe"),
+        F.explode(sim.probe_buckets(F.col("qemb"), cents, nprobe))
+        .alias("_bkt"),
+    )
+    indexed = corpus.select(
+        "vec_id", F.col("embedding").alias("_ce"),
+        sim.centroid_assignment(F.col("embedding"), cents).alias("_bkt"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_ppm").desc(), F.col("vec_id").asc()
+    )
+    return (
+        probed.join(indexed, "_bkt")
+        .select(
+            "query_id", "vec_id",
+            F.floor(cosine(F.col("_qe"), F.col("_ce")) * 1_000_000)
+            .cast("long").alias("cos_ppm"),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
 def test_knn_join_ivf_pandas_strategy_equals_expr(spark):
-    """The per-bucket Arrow/numpy scoring path must reproduce the
-    Column-expr path EXACTLY — ids, ppm scores and ranks — at full and
-    partial probe (the sequential-fold numpy dot is bit-identical to
-    the interpreted HOF fold)."""
+    """The per-bucket Arrow/numpy scorer must reproduce the Column-expr
+    plan EXACTLY — ids, ppm scores and ranks — at full and partial
+    probe (the vecfold dot is bit-identical to the interpreted HOF
+    fold). Any strategy other than "pandas" is rejected."""
     rng = np.random.RandomState(13)
     base = rng.randn(60, 16)
     rows = [(i, base[i].tolist()) for i in range(60)]
@@ -202,8 +236,8 @@ def test_knn_join_ivf_pandas_strategy_equals_expr(spark):
     for nprobe in (6, 2):
         want = {
             (r["query_id"], r["vec_id"]): (r["cos_ppm"], r["rank"])
-            for r in sim.knn_join_ivf(
-                corpus, "embedding", qdf, cents, k=4, nprobe=nprobe
+            for r in _column_knn_join_ivf(
+                corpus, qdf, cents, k=4, nprobe=nprobe
             ).collect()
         }
         got = {
@@ -214,6 +248,8 @@ def test_knn_join_ivf_pandas_strategy_equals_expr(spark):
             ).collect()
         }
         assert got == want, nprobe
+    with pytest.raises(ValueError, match="strategy"):
+        sim.knn_join_ivf(corpus, "embedding", qdf, cents, strategy="column")
 
 
 def test_knn_join_ivf_pandas_string_ids(spark):
@@ -230,20 +266,18 @@ def test_knn_join_ivf_pandas_string_ids(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb"))
     cents = sim.seeded_centroids(8, 3, seed=2)
     want = {(r["query_id"], r["rank"]): r["vec_id"]
-            for r in sim.knn_join_ivf(
-                df, "embedding", qdf, cents, k=5, nprobe=3).collect()}
+            for r in _column_knn_join_ivf(
+                df, qdf, cents, k=5, nprobe=3).collect()}
     got = {(r["query_id"], r["rank"]): r["vec_id"]
            for r in sim.knn_join_ivf(
-               df, "embedding", qdf, cents, k=5, nprobe=3,
-               strategy="pandas").collect()}
+               df, "embedding", qdf, cents, k=5, nprobe=3).collect()}
     assert got == want
 
 
 def test_knn_join_ivf_partial_probe_planted_clusters(spark):
     """Tight planted clusters around each centroid: with nprobe=1 every
     query's true top-k lives in its own bucket, so partial probe is
-    exact on this fixture — and the corpus side must not shuffle (the
-    probed query side broadcasts)."""
+    exact on this fixture. (The plan shape is pinned in test_plans.)"""
     rng = np.random.RandomState(11)
     cents = sim.seeded_centroids(16, 4, seed=3)
     rows, rid = [], 0
@@ -259,9 +293,6 @@ def test_knn_join_ivf_partial_probe_planted_clusters(spark):
         df.vec_id.alias("query_id"), df.embedding.alias("qemb"))
 
     got = sim.knn_join_ivf(corpus, "embedding", qdf, cents, k=6, nprobe=1)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
     by_q = _collect_ranked(got)
     truth = {r[0]: r[1] for r in rows}
     for qid, ids in by_q.items():
