@@ -188,7 +188,7 @@ def _compile_grok_dictionary_native(
     several projections, but ProjectExec's runtime subexpression
     elimination evaluates it once per row; the per-group regexp_extract
     re-runs the winning regex — the JVM-vs-Python tradeoff both
-    strategies exist to let users measure (bench.py tracks it)."""
+    strategies exist to let users measure."""
     order: list[tuple[str, str, dict[str, int]]] = []
     all_groups: list[str] = []
     for name, p in patterns.items():

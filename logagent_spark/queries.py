@@ -400,40 +400,6 @@ FROM events
 # ---------------------------------------------------------------------------
 # training-data ops
 
-def q_dedup_exact_stats(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        dd.content_hash(F.col("text")).alias("h")
-    ).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("h").alias("n_unique"),
-    )
-
-
-SQL_DEDUP_EXACT = r"""
-SELECT count(*) AS n_rows,
-       count(DISTINCT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))) AS n_unique
-FROM documents
-"""
-
-
-def q_dedup_exact_keep(spark, sf_dir):
-    """Exact dedup winners: smallest doc_id per normalized content hash
-    (min-by aggregation + left-semi join — one shuffle on the uniform
-    hash, no window sort)."""
-    docs = _t(spark, sf_dir, "documents")
-    return dd.dedup_exact(docs, "doc_id", "text").select("doc_id", "lang")
-
-
-SQL_DEDUP_EXACT_KEEP = r"""
-SELECT doc_id, lang FROM documents
-WHERE doc_id IN (
-  SELECT min(doc_id) FROM documents
-  GROUP BY md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
-)
-"""
-
-
 def q_text_stats(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     c = F.col("text")
@@ -768,8 +734,9 @@ _NDUP_THRESHOLD_PPM = 400000
 def q_embedding_near_dup(spark, sf_dir):
     """Banded hyperplane-LSH near-dup pairs. The DuckDB oracle rebuilds
     the SAME LSH (the planes are shared literals), so the gate checks
-    the full approximate pipeline; recall vs the exact baseline is
-    measured separately in bench.py."""
+    the full approximate pipeline; `embedding_near_dup_exact` is the
+    exact baseline it approximates, and perfbench reports LSH recall
+    as `dedup.recall`."""
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
