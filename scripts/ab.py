@@ -40,7 +40,7 @@ import time
 
 MARK = "AB "
 CPUS = len(os.sched_getaffinity(0))  # only one worker executes at a time
-HEAP = "4g"  # per driver: two JVMs and their Python workers fit in 16 GB
+HEAP = "4g"  # per Spark JVM: two of them and their Python workers fit in 16 GB
 
 
 def worker(tree: str, sf_dir: str) -> None:
@@ -70,7 +70,7 @@ def worker(tree: str, sf_dir: str) -> None:
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             reply({"s": time.perf_counter() - t0})
-        except Exception as e:  # reported by the driver, which stops
+        except Exception as e:  # the parent process reports it and stops
             reply({"error": f"{name}: {type(e).__name__}: {e}"[:2000]})
     spark.stop()
 
