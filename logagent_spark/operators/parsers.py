@@ -1,4 +1,4 @@
-"""Parser compilers — csv / regex / jsonify over the `message` column.
+"""Parser compilers — csv / regex / grok / jsonify over the `message` column.
 
 Reproduces /root/reference/agent/task/task.go:201-254:
 
@@ -6,17 +6,20 @@ Reproduces /root/reference/agent/task/task.go:201-254:
   column keeps remaining delimiters; fewer parts than columns leaves the
   trailing columns absent (NULL). Compiled to a single ``split`` +
   ``F.get`` projections (ANSI-safe, null on short rows).
-* ``regex`` — named-group extraction with unanchored search; NO match
-  leaves the row intact with all group columns absent (NULL); a matched
-  row yields "" for non-participating groups (Go FindStringSubmatch).
-  Two physical strategies:
-    - native: per-group ``regexp_extract`` guarded by one ``rlike``
-      (whole-stage codegen; the regex literally runs k+1 times but stays
-      JVM-side — best for few groups);
-    - grok: ONE Arrow-batched pandas UDF evaluating a precompiled pattern
-      per batch (single ``re.search`` per row, all groups read off the
-      match object) returning a struct (the BASELINE north-star path;
-      best for dictionary-sized group sets).
+* ``regex`` / ``grok`` — named-group extraction with unanchored search.
+  ``grok`` is an ordered dictionary of patterns: the first match wins
+  and its name lands in ``grok_pattern``. ``regex`` is compiled as the
+  one-entry dictionary that emits no ``grok_pattern``. A matched row
+  yields "" for non-participating groups (Go FindStringSubmatch). No
+  match, or a winner that lacks a group, leaves the row intact: an
+  output column absent before the parse is NULL, a pre-existing string
+  one keeps its value. One compiler per ``regex_strategy``:
+    - native: when-chains of ``rlike`` guards + ``regexp_extract`` per
+      group (whole-stage codegen; the winning regex runs once more per
+      group, but everything stays JVM-side);
+    - grok: ONE Arrow-batched pandas UDF running the whole dictionary
+      per batch (one ``re.search`` per row and pattern until the first
+      hit, all groups read off the match object) returning a struct.
 * ``jsonify`` — ``json.Unmarshal`` merged into the row. Schema-first:
   the spec declares columns+types; compiled to one ``from_json`` +
   flatten. A corrupt document is a parse error => row dropped from all
@@ -74,48 +77,22 @@ def compile_parser(
         n = len(spec.columns)
         parts = escaped_split(msg, delim, n)
         # Go leaves the row untouched where the split comes up short
-        # (task.go:216-222): a pre-existing STRING column keeps its value
-        # when its part is absent. (A pre-existing non-string column is
-        # still overwritten with NULL — columnar schemas are uniform;
-        # documented divergence, same family as the jsonify merge note.)
-        cols = []
-        for i, name in enumerate(spec.columns):
-            part = F.get(parts, i)
-            if name in schema and is_string(schema[name]):
-                part = F.coalesce(part, F.col(name))
-            cols.append((name, part))
-        return CompiledParser(
-            columns=cols,
-            schema_updates={name: T.StringType() for name in spec.columns},
+        # (task.go:216-222)
+        return _string_outputs(
+            schema,
+            {name: F.get(parts, i) for i, name in enumerate(spec.columns)},
         )
 
-    if spec.mode == "regex":
-        # `%{NAME:field}` grok references expand to named groups first
-        # (a pattern without references passes through untouched)
-        pattern = expand_grok(spec.regex)
-        groups = go_regex_groups(pattern)  # name -> idx (validates syntax)
-        if regex_strategy == "grok":
-            return _compile_grok(pattern, groups)
-        jpat = to_java_regex(pattern)
-        matched = msg.rlike(jpat)
-        # no-match leaves the row untouched (task.go:227-236): a
-        # pre-existing STRING column keeps its value on unmatched rows
-        # (non-string pre-existing columns: see the csv note above)
-        cols = []
-        for name, idx in groups.items():
-            extracted = F.when(matched, F.regexp_extract(msg, jpat, idx))
-            if name in schema and is_string(schema[name]):
-                extracted = extracted.otherwise(F.col(name))
-            cols.append((name, extracted))
-        return CompiledParser(
-            columns=cols,
-            schema_updates={name: T.StringType() for name in groups},
+    if spec.mode in ("regex", "grok"):
+        if regex_strategy not in ("native", "grok"):
+            raise ValueError(f"unsupported regex_strategy `{regex_strategy}`")
+        compile_dictionary = (
+            _compile_grok_dictionary_native if regex_strategy == "native"
+            else _compile_grok_dictionary
         )
-
-    if spec.mode == "grok":
-        if regex_strategy == "native":
-            return _compile_grok_dictionary_native(spec.patterns)
-        return _compile_grok_dictionary(spec.patterns)
+        if spec.mode == "regex":
+            return compile_dictionary({"": spec.regex}, schema, None)
+        return compile_dictionary(spec.patterns, schema, "grok_pattern")
 
     if spec.mode == "jsonify":
         corrupt = "_corrupt"
@@ -177,80 +154,94 @@ def compile_parser(
     raise ValueError(f"unsupported parser mode `{spec.mode}`")
 
 
-def _compile_grok_dictionary_native(
-    patterns: dict[str, str]
+def _string_outputs(
+    schema: Schema, outputs: dict[str, Column]
 ) -> CompiledParser:
-    """Grok dictionary compiled to pure Column expressions (JVM,
-    whole-stage codegen): `grok_pattern` is a when-chain of rlike guards
-    in dictionary order; each group column is a when-chain over ALL
-    patterns (a winning pattern that lacks the group yields NULL, same
-    as the UDF strategy). Each pattern's rlike literally appears in
-    several projections, but ProjectExec's runtime subexpression
-    elimination evaluates it once per row; the per-group regexp_extract
-    re-runs the winning regex — the JVM-vs-Python tradeoff both
-    strategies exist to let users measure."""
-    order: list[tuple[str, str, dict[str, int]]] = []
+    """String output columns that leave the row untouched where their
+    value is NULL: a pre-existing STRING column keeps its value. (A
+    pre-existing non-string column is still overwritten with NULL —
+    columnar schemas are uniform; documented divergence, same family as
+    the jsonify merge note.)"""
+    return CompiledParser(
+        columns=[
+            (c, F.coalesce(v, F.col(c))
+             if c in schema and is_string(schema[c]) else v)
+            for c, v in outputs.items()
+        ],
+        schema_updates={c: T.StringType() for c in outputs},
+    )
+
+
+def _dictionary(
+    patterns: dict[str, str]
+) -> tuple[list[tuple[str, str, dict[str, int]]], list[str]]:
+    """(name, expanded pattern, group name -> idx) per pattern in
+    dictionary order, and every group name in order of first
+    appearance. `%{NAME:field}` grok references expand to named groups
+    first (a pattern without references passes through untouched)."""
+    entries = []
     all_groups: list[str] = []
     for name, p in patterns.items():
         pattern = expand_grok(p)
-        groups = go_regex_groups(pattern)
-        order.append((name, to_java_regex(pattern), groups))
-        for g in groups:
-            if g not in all_groups:
-                all_groups.append(g)
+        groups = go_regex_groups(pattern)  # validates syntax
+        entries.append((name, pattern, groups))
+        all_groups += [g for g in groups if g not in all_groups]
+    return entries, all_groups
 
+
+def _compile_grok_dictionary_native(
+    patterns: dict[str, str], schema: Schema, name_col: str | None
+) -> CompiledParser:
+    """Grok dictionary compiled to pure Column expressions (JVM,
+    whole-stage codegen): every output column is a when-chain of rlike
+    guards in dictionary order — the winner's name for `name_col`, its
+    regexp_extract for a group (NULL if the winner lacks the group).
+    Each pattern's rlike literally appears in several projections, but
+    ProjectExec's runtime subexpression elimination evaluates it once
+    per row; the per-group regexp_extract re-runs the winning regex —
+    the JVM-vs-Python tradeoff both strategies exist to let users
+    measure."""
+    entries, all_groups = _dictionary(patterns)
     msg = F.col("message")
-    name_expr = F.lit(None).cast(T.StringType())
-    chain = None
-    for name, jpat, _ in order:
-        m = msg.rlike(jpat)
-        chain = F.when(m, F.lit(name)) if chain is None else chain.when(
-            m, F.lit(name)
-        )
-    name_expr = chain if chain is not None else name_expr
+    jpats = [to_java_regex(p) for _, p, _ in entries]
 
-    cols: list[tuple[str, Column]] = [("grok_pattern", name_expr)]
-    updates: dict[str, T.DataType] = {"grok_pattern": T.StringType()}
-    for g in all_groups:
-        gchain = None
-        for name, jpat, groups in order:
+    def first_match(values: list[Column]) -> Column:
+        chain = None
+        for jpat, v in zip(jpats, values):
             m = msg.rlike(jpat)
-            val = (
-                F.regexp_extract(msg, jpat, groups[g])
-                if g in groups
-                else F.lit(None).cast(T.StringType())
-            )
-            gchain = F.when(m, val) if gchain is None else gchain.when(m, val)
-        cols.append((g, gchain))
-        updates[g] = T.StringType()
-    return CompiledParser(columns=cols, schema_updates=updates)
+            chain = F.when(m, v) if chain is None else chain.when(m, v)
+        return chain
+
+    outputs: dict[str, Column] = {}
+    if name_col:
+        outputs[name_col] = first_match([F.lit(n) for n, _, _ in entries])
+    for g in all_groups:
+        outputs[g] = first_match([
+            F.regexp_extract(msg, jpat, groups[g]) if g in groups
+            else F.lit(None).cast(T.StringType())
+            for jpat, (_, _, groups) in zip(jpats, entries)
+        ])
+    return _string_outputs(schema, outputs)
 
 
-def _compile_grok_dictionary(patterns: dict[str, str]) -> CompiledParser:
-    """Grok DICTIONARY (BASELINE north-star): ordered named patterns,
-    first matching pattern wins and contributes its named groups; the
-    winning pattern's name lands in `grok_pattern`. One vectorized
-    pandas UDF evaluates the whole dictionary per Arrow batch — each
-    pattern runs only on the rows no earlier pattern matched.
-    `%{NAME:field}` grok references expand before compilation."""
-    compiled = {
-        name: re.compile(expand_grok(p)) for name, p in patterns.items()
-    }
-    all_groups: list[str] = []
-    for name, cre in compiled.items():
-        for g in cre.groupindex:
-            if g not in all_groups:
-                all_groups.append(g)
+def _compile_grok_dictionary(
+    patterns: dict[str, str], schema: Schema, name_col: str | None
+) -> CompiledParser:
+    """The dictionary as ONE vectorized pandas UDF per Arrow batch, the
+    BASELINE north-star path: each pattern runs only on the rows no
+    earlier pattern matched, and the struct it returns carries exactly
+    the output columns."""
+    entries, all_groups = _dictionary(patterns)
+    outputs = ([name_col] if name_col else []) + all_groups
     out_type = T.StructType(
-        [T.StructField("grok_pattern", T.StringType(), True)]
-        + [T.StructField(g, T.StringType(), True) for g in all_groups]
+        [T.StructField(c, T.StringType(), True) for c in outputs]
     )
 
-    # (pattern name, bound search, [(group name, group idx)]) — resolved
+    # (pattern name, bound search, [(group name, group idx)]) — compiled
     # once per executor so the batch loop touches no dicts.
     plan = [
-        (name, cre.search, list(cre.groupindex.items()))
-        for name, cre in compiled.items()
+        (name, re.compile(p).search, list(groups.items()))
+        for name, p, groups in entries
     ]
 
     @F.pandas_udf(out_type)
@@ -260,8 +251,8 @@ def _compile_grok_dictionary(patterns: dict[str, str]) -> CompiledParser:
         # the minimum regex work the dictionary semantics permit.
         vals = s.to_numpy(dtype=object)
         n_rows = len(vals)
-        out = {c: np.empty(n_rows, dtype=object)
-               for c in ("grok_pattern", *all_groups)}
+        out = {c: np.empty(n_rows, dtype=object) for c in all_groups}
+        names = np.empty(n_rows, dtype=object)
         for i, v in enumerate(vals):
             if type(v) is not str:
                 continue
@@ -269,66 +260,20 @@ def _compile_grok_dictionary(patterns: dict[str, str]) -> CompiledParser:
                 m = search(v)
                 if m is None:
                     continue
-                out["grok_pattern"][i] = name
+                names[i] = name
                 g = m.group
                 for gname, gi in gitems:
                     val = g(gi)
                     out[gname][i] = val if val is not None else ""
                 break
+        if name_col:
+            out = {name_col: names, **out}
         return pd.DataFrame(out, index=s.index)
 
     tmp = "_grokdict_parsed"
-    cols: list[tuple[str, Column]] = [(tmp, grok_dict(F.col("message")))]
-    updates: dict[str, T.DataType] = {"grok_pattern": T.StringType()}
-    cols.append(("grok_pattern", F.col(tmp).getField("grok_pattern")))
-    for g in all_groups:
-        cols.append((g, F.col(tmp).getField(g)))
-        updates[g] = T.StringType()
-    cols.append((tmp, None))
-    return CompiledParser(columns=cols, schema_updates=updates)
-
-
-# ---------------------------------------------------------------------------
-# grok path: one Arrow-vectorized pandas UDF per pattern
-
-def _compile_grok(pattern: str, groups: dict[str, int]) -> CompiledParser:
-    names = list(groups)
-    out_type = T.StructType(
-        [T.StructField(n, T.StringType(), True) for n in names]
+    parsed = _string_outputs(
+        schema, {c: F.col(tmp).getField(c) for c in outputs}
     )
-    # Precompile once per executor: the pattern is captured in the closure
-    # and compiled at UDF-definition time, not per batch (SURVEY.md §4).
-    cre = re.compile(pattern)
-
-    @F.pandas_udf(out_type)
-    def grok_extract(s: pd.Series) -> pd.DataFrame:
-        # One `re.search` per row; the match object yields every group
-        # (Series.str.extract + str.contains would run the regex twice —
-        # measured 2x slower on 1 KB prose docs at 100k rows).
-        # Go parity: in a matched row a non-participating group is "";
-        # in an unmatched/null row every group stays NULL.
-        search = cre.search
-        vals = s.to_numpy(dtype=object)
-        n_rows = len(vals)
-        out = {n: np.empty(n_rows, dtype=object) for n in names}
-        for i, v in enumerate(vals):
-            if type(v) is not str:
-                continue
-            m = search(v)
-            if m is None:
-                continue
-            g = m.group
-            for n, gi in groups.items():
-                val = g(gi)
-                out[n][i] = val if val is not None else ""
-        return pd.DataFrame(out, index=s.index)
-
-    tmp = "_grok_parsed"
-    cols: list[tuple[str, Column]] = [(tmp, grok_extract(F.col("message")))]
-    for n in names:
-        cols.append((n, F.col(tmp).getField(n)))
-    cols.append((tmp, None))
-    return CompiledParser(
-        columns=cols,
-        schema_updates={n: T.StringType() for n in names},
-    )
+    parsed.columns = [(tmp, grok_dict(F.col("message"))), *parsed.columns,
+                      (tmp, None)]
+    return parsed

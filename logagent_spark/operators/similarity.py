@@ -144,7 +144,8 @@ def seeded_centroids(dim: int, n_centroids: int, seed: int = 42) -> np.ndarray:
 def centroid_assignment(
     emb: Column, centroids: np.ndarray
 ) -> Column:
-    """argmax over centroid dot products, as a Column expression.
+    """argmax over centroid dot products, as a Column expression — the
+    reference `assign_buckets_pandas` is pinned bit-identical against.
 
     The dots land in ONE array literal and the argmax is
     array_position(arr, array_max(arr)): each dot is evaluated exactly
@@ -240,10 +241,9 @@ def ivf_index(
     df: DataFrame, emb_col: str, centroids: np.ndarray, bucket_col: str = "ivf_bucket"
 ) -> DataFrame:
     """Materialize the bucket assignment (at scale: write-partitioned by
-    this column so queries prune files)."""
-    return df.withColumn(
-        bucket_col, centroid_assignment(F.col(emb_col), centroids)
-    )
+    this column so queries prune files) — the one Arrow assignment pass
+    `kmeans_refine` and `knn_join_ivf` use too."""
+    return assign_buckets_pandas(df, emb_col, centroids, bucket_col)
 
 
 def ivf_probes(

@@ -2,9 +2,9 @@
 plan-shape gates in tests/test_plans.py.
 
 Plan strings prove an Exchange exists; these read what it actually
-moved. Used by the census-prefilter crossover bench and the
-shuffle-volume pytest gates (the UI/REST endpoint is disabled in this
-session factory, so metrics come from the executed plan tree itself).
+moved. Used by the shuffle-volume pytest gates (the UI/REST endpoint
+is disabled in this session factory, so metrics come from the executed
+plan tree itself).
 """
 
 from __future__ import annotations

@@ -243,6 +243,27 @@ def test_connected_components_two_clique_bridge(spark):
     assert small == dist
 
 
+def test_connected_components_duplicate_heavy_pairs(spark):
+    """`small_graph_edges` counts RAW pairs: a list where every edge
+    repeats in both orientations, plus self-loops, exceeds the threshold
+    while its distinct pairs do not, so it takes the distributed path —
+    which must return exactly the union-find components."""
+    base = [(1, 2), (2, 3), (3, 1), (10, 11), (30, 31)]
+    raw = [e for a, b in base for e in [(a, b), (b, a)] * 3]
+    raw += [(5, 5), (5, 5), (1, 1), (1, 1)]
+    threshold = 15
+    assert len(set(raw)) <= threshold < len(raw)
+    pairs = spark.createDataFrame(raw, "a long, b long")
+    union_find = {r["id"]: r["component"]
+                  for r in dedup.connected_components(pairs).collect()}
+    distributed = {r["id"]: r["component"]
+                   for r in dedup.connected_components(
+                       pairs, small_graph_edges=threshold).collect()}
+    assert union_find == distributed == {
+        1: 1, 2: 1, 3: 1, 5: 5, 10: 10, 11: 10, 30: 30, 31: 30,
+    }
+
+
 def test_suggest_lsh_config():
     """The scale-path config guard: high thresholds get a sparse,
     recall-sound banding; the gate config's admit-most behavior is never

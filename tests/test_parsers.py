@@ -184,20 +184,49 @@ def test_regex_underscored_group_names(spark, strategy):
     assert rows[1]["client_ip"] is None
 
 
-def test_regex_no_match_keeps_preexisting_string_column(spark):
+def _parity_over_preexisting(spark, parser, strategy, rows, ddl):
+    """Run `parser` over rows that already carry output columns and
+    compare every output column of every row with `oracle.parse_row`."""
+    df = spark.createDataFrame(rows, ddl)
+    pipe = CompiledPipeline(PipelineSpec(parser=parser),
+                            regex_strategy=strategy)
+    got = {r["id"]: r.asDict() for r in pipe.transform(df).frame.collect()}
+    for r in df.collect():
+        want = r.asDict()
+        oracle.parse_row(parser, want)
+        g = got[want["id"]]
+        for c in g.keys() - {DROP_COL}:
+            assert g[c] == want.get(c), (strategy, c, g, want)
+
+
+@pytest.mark.parametrize("strategy", ["native", "grok"])
+def test_regex_no_match_keeps_preexisting_string_column(spark, strategy):
     """Go leaves the row untouched on no-match (task.go:227-236): a
     pre-existing string column must survive unmatched rows instead of
     being overwritten with NULL."""
-    df = spark.createDataFrame(
-        [(0, "match 1", "old0"), (1, "no digits here", "old1")],
+    _parity_over_preexisting(
+        spark, ParserSpec(mode="regex", regex=r"match (?P<num>\d+)"),
+        strategy,
+        [(0, "match 1", "old0"), (1, "no digits here", "old1"),
+         (2, None, "old2")],
         "id long, message string, num string",
     )
-    spec = PipelineSpec(parser=ParserSpec(mode="regex",
-                                          regex=r"match (?P<num>\d+)"))
-    rows = {r["id"]: r for r in
-            CompiledPipeline(spec).transform(df).frame.collect()}
-    assert rows[0]["num"] == "1"        # matched: overwritten
-    assert rows[1]["num"] == "old1"     # unmatched: kept
+
+
+@pytest.mark.parametrize("strategy", ["native", "grok"])
+def test_grok_dictionary_keeps_preexisting_string_columns(spark, strategy):
+    """Dictionary twin: a pre-existing string column survives both a
+    row no pattern matches and a winner that lacks its group; a
+    pre-existing `grok_pattern` survives the no-match row."""
+    _parity_over_preexisting(
+        spark,
+        ParserSpec(mode="grok", patterns={"a": r"^match (?P<num>\d+)$",
+                                          "b": r"^no (?P<w>\w+)"}),
+        strategy,
+        [(0, "match 1", "old0", "g0"), (1, "no digits here", "old1", "g1"),
+         (2, "matches nothing", "old2", "g2"), (3, None, "old3", "g3")],
+        "id long, message string, num string, grok_pattern string",
+    )
 
 
 def test_csv_short_row_keeps_preexisting_string_column(spark):

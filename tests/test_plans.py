@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from logagent_spark.config import PipelineSpec
 from logagent_spark.datagen import WAF_REGEX, write_pages
 from logagent_spark.plans import skew
-from logagent_spark.plans.pipeline import CompiledPipeline
+from logagent_spark.plans.pipeline import DROP_COL, CompiledPipeline
 from logagent_spark.sources import from_pages
 
 
@@ -90,11 +90,18 @@ def test_fanout_is_shuffle_free(spark, pages_path):
     assert plan.count("Scan parquet") == 1, plan
 
 
+def _assert_regex_output_shape(src, res):
+    """`regex` mode adds exactly its group columns (and the drop-reason
+    column every transform carries) — no `grok_pattern`."""
+    groups = list(re.compile(WAF_REGEX).groupindex)
+    assert res.frame.columns == src.columns + groups + [DROP_COL]
+
+
 def test_native_parse_is_jvm_only(spark, pages_path):
     spec = PipelineSpec.from_dict({"Parser": {"Mode": "regex", "Regex": WAF_REGEX}})
-    res = CompiledPipeline(spec).transform(
-        from_pages(spark.read.parquet(pages_path))
-    )
+    src = from_pages(spark.read.parquet(pages_path))
+    res = CompiledPipeline(spec).transform(src)
+    _assert_regex_output_shape(src, res)
     plan = _plan(res.frame)
     assert "EvalPython" not in plan
     assert "*(" in plan  # whole-stage codegen spans render as *(n)
@@ -102,9 +109,9 @@ def test_native_parse_is_jvm_only(spark, pages_path):
 
 def test_grok_parse_is_arrow_vectorized(spark, pages_path):
     spec = PipelineSpec.from_dict({"Parser": {"Mode": "regex", "Regex": WAF_REGEX}})
-    res = CompiledPipeline(spec, regex_strategy="grok").transform(
-        from_pages(spark.read.parquet(pages_path))
-    )
+    src = from_pages(spark.read.parquet(pages_path))
+    res = CompiledPipeline(spec, regex_strategy="grok").transform(src)
+    _assert_regex_output_shape(src, res)
     plan = _plan(res.frame)
     assert "ArrowEvalPython" in plan       # vectorized, not row-at-a-time
     assert "BatchEvalPython" not in plan
